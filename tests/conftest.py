@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from wallaby2caom2_spark import datagen, oracle
@@ -11,6 +13,10 @@ from wallaby2caom2_spark import datagen, oracle
 def spark():
     from wallaby2caom2_spark.session import get_spark
 
+    # the session pre-touches its whole heap (-Xms=-Xmx), so the library
+    # default (12g, sized for a benchmark host) would pin most of a 16 GB
+    # machine; the suite's fixtures fit in 4g. An explicit setting wins.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     s = get_spark(app_name="w2c2s-tests", cpus=8, shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -102,22 +102,38 @@ def test_metrics_counters(spark, clips_df, oracle_labels):
 def test_oracle_and_pipeline_agree_on_null_metadata(spark):
     """NULL declared sr/duration must not crash the labeler (it used to
     TypeError on int(None)) and must produce the same keep/drop decision
-    the Spark cascade's three-valued logic yields for the same row."""
+    the Spark cascade's three-valued logic yields for the same row — on
+    every Arrow path that reads declared metadata: the fused stage
+    (``quality_filter``), the kept-clips recompute (``kept_clips``) and the
+    curation DAG's single pass (``curate._staged``), whose worker-side
+    signal gate sees NULL metadata as None, gated and ungated alike."""
     import numpy as np
 
     from wallaby2caom2_spark import oracle
+    from wallaby2caom2_spark.config import DEFAULT_CONFIG
     from wallaby2caom2_spark.functions import audio
-    from wallaby2caom2_spark.plans.pipeline import quality_filter
+    from wallaby2caom2_spark.operators import cascade
+    from wallaby2caom2_spark.operators.audio_signals import quality_and_signals
+    from wallaby2caom2_spark.plans import curate
+    from wallaby2caom2_spark.plans.pipeline import kept_clips, quality_filter
 
     t = np.arange(16000, dtype=np.float32) / 16000
-    wav = audio.encode_wav((0.4 * np.sin(2 * np.pi * 220 * t)).astype("float32"), 16000)
+    tone = (0.4 * np.sin(2 * np.pi * 220 * t)).astype("float32")
+    wav = audio.encode_wav(tone, 16000)
+    pcm = audio.encode_pcm_s16le(tone)
+    text = "every morning the children walk slowly towards school"
     rows = [
-        {"clip_id": "null_sr", "bytes": wav, "sr_hz": None, "dur_ms": 1000,
-         "codec": "wav",
-         "transcript": "every morning the children walk slowly towards school"},
-        {"clip_id": "null_dur", "bytes": wav, "sr_hz": 16000, "dur_ms": None,
-         "codec": "wav",
-         "transcript": "every morning the children walk slowly towards school"},
+        {"clip_id": cid, "bytes": payload, "sr_hz": sr, "dur_ms": dur,
+         "codec": codec, "transcript": text}
+        for cid, payload, codec, sr, dur in (
+            ("null_sr", wav, "wav", None, 1000),
+            ("null_dur", wav, "wav", 16000, None),
+            ("null_both", wav, "wav", None, None),
+            # headerless codec: the declared rate is the only rate
+            ("null_sr_pcm", pcm, "pcm_s16le", None, 1000),
+            ("null_dur_pcm", pcm, "pcm_s16le", 16000, None),
+            ("null_dur_sr_mismatch", wav, "wav", 8000, None),
+        )
     ]
     labels = {l["clip_id"]: l for l in oracle.label_rows(rows)}
     df = spark.createDataFrame(
@@ -126,9 +142,33 @@ def test_oracle_and_pipeline_agree_on_null_metadata(spark):
         "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string, "
         "transcript string",
     )
+    # the oracle labels exercise both outcomes
+    assert {l["keep"] for l in labels.values()} == {True, False}
+
     got = {r["clip_id"]: r for r in quality_filter(df).collect()}
-    for cid in ("null_sr", "null_dur"):
-        assert got[cid]["keep"] == labels[cid]["keep"], cid
-        assert (got[cid]["drop_reason"] or None) == (
-            labels[cid]["drop_reason"] or None
-        ), cid
+    # the cascade over the curation pass's own features (what _staged runs)
+    single_pass = {
+        r["clip_id"]: r
+        for r in quality_and_signals(df)
+        .transform(cascade.with_transcript_stats)
+        .transform(lambda d: cascade.with_keep_drop(d, DEFAULT_CONFIG))
+        .collect()
+    }
+    kept = {r["clip_id"] for r in kept_clips(df).collect()}
+    staged = {
+        gated: {
+            r["clip_id"]: r["stage"]
+            for r in curate._staged(df, signals_for_dropped=not gated).collect()
+        }
+        for gated in (True, False)
+    }
+    for cid, want in labels.items():
+        for path in (got, single_pass):
+            assert path[cid]["keep"] == want["keep"], cid
+            assert (path[cid]["drop_reason"] or None) == (
+                want["drop_reason"] or None
+            ), cid
+        assert (cid in kept) == want["keep"], cid
+        assert (staged[True][cid] == "1_quality_dropped") == (not want["keep"]), cid
+        # skipping signals for predicted drops never changes a label
+        assert staged[True][cid] == staged[False][cid], cid

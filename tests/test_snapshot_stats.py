@@ -249,3 +249,54 @@ def test_stats_survive_json_roundtrip_with_decimals(spark, tmp_path):
     ds = [s["cols"]["d"] for s in m["stats"].values()]
     assert all(isinstance(x[0], float) for x in ds)
     assert st.read_table(spark, path, where="d >= 2.0").count() == 1
+
+
+@pytest.mark.parametrize(
+    "pred, c_type",
+    [
+        # OR after a newline: no space-delimited " or " to spot, and the
+        # c = 5 conjunct alone would prune every bucket
+        ("c = 5 and a = 1\nor b = 2", "int"),
+        # AND inside a string literal: the split yields a phantom
+        # c = 'v' whose zone map excludes every bucket
+        ("name = 'x and c = ''v'''", "string"),
+    ],
+)
+def test_prune_keyword_and_literal_edge_cases_equal_filter(
+    spark, tmp_path, pred, c_type
+):
+    path = str(tmp_path / "edge_tbl")
+    rows = [
+        (f"k{i:03d}", i % 7, i % 3, i % 5, ["x and c = 'v'", "y"][i % 2])
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(
+        rows, "clip_id string, a int, b int, c int, name string"
+    ).withColumn("c", F.col("c").cast(c_type))
+    st.create_table(spark, path, df, key="clip_id", n_buckets=8)
+    assert st.prune_buckets(st.read_manifest(path), pred) is None
+    got = sorted(r["clip_id"] for r in st.read_table(spark, path, where=pred).collect())
+    want = sorted(
+        r["clip_id"] for r in st.read_table(spark, path).filter(pred).collect()
+    )
+    assert got == want and want
+
+
+def test_pruned_read_keeps_widened_columns(spark, table):
+    """A ``where`` that prunes every bucket written after a widening merge
+    still sees the new column (as NULL on the older buckets' rows)."""
+    upd = spark.createDataFrame(
+        [("k0001", 1, 1.0, "grp1", "x")], SCHEMA + ", extra string"
+    )
+    (touched,) = st.merge(spark, table, upd)["touched_buckets"]
+    m = st.read_manifest(table)
+    pred = "extra = 'nope' AND v >= 0"
+    kept = st.prune_buckets(m, pred)
+    assert kept is not None and touched not in kept
+    for p in (pred, "v < 5"):
+        got = st.read_table(spark, table, where=p)
+        want = st.read_table(spark, table).filter(p)
+        assert "extra" in got.columns
+        assert sorted(map(tuple, got.select(*want.columns).collect())) == sorted(
+            map(tuple, want.collect())
+        ), p

@@ -14,8 +14,9 @@ pipeline over a table of audio clip + transcript pairs:
   ``config/config.yml:28-47``) becomes a snapshot-checkpointed, exactly-once
   resumable run with lineage + metrics tables.
 
-Nothing is ported: all per-row logic is either Catalyst column expressions or
-one of four Arrow-batched pandas UDF stages (decode, langid, perplexity, scrub).
+Nothing is ported: the quality filter's per-row logic is either Catalyst
+column expressions or one Arrow-batched feature kernel (decode, langid,
+perplexity, scrub — operators/fused_stage.py).
 """
 
 __version__ = "0.1.0"

@@ -69,9 +69,10 @@ def encode_flac_stub(samples: np.ndarray, sr_hz: int) -> bytes:
 def declared_sr(value) -> int:
     """Declared-sample-rate column value → int, NULL-safe.
 
-    Every batched operator reads ``sr_hz`` through pandas, where a nullable
-    int column arrives as float64 with NaN for NULL; ``int(NaN)`` raises and
-    would fail the whole batch. A NULL declared rate means "no declared
+    The pandas-batched operators read ``sr_hz`` through pandas, where a
+    nullable int column arrives as float64 with NaN for NULL (the Arrow
+    paths hand NULL over as None); ``int(NaN)`` raises and would fail the
+    whole batch. A NULL declared rate means "no declared
     rate" (0) — the measured rate wins, and callers' ``sr <= 0`` containment
     routes truly rateless clips to their not-ok row.
     """

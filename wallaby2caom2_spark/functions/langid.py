@@ -4,9 +4,9 @@ Pure numpy, deterministic, built at import time from an embedded seed corpus
 (no external model files: the container has no fastText binary, so this plays
 its role — same architecture: hashed char n-grams → linear scores → softmax).
 
-The model is *shared* by the Spark iterator pandas-UDF stage
-(operators/langid_stage.py, loaded once per executor python worker) and the
-pure-Python oracle labeler, mirroring how the reference dispatches the same
+The model is *shared* by the Spark quality-feature kernel
+(operators/fused_stage.py via functions/textscore.py, loaded once per
+executor python worker) and the pure-Python oracle labeler, mirroring how the reference dispatches the same
 ``get_*()`` blueprint functions from both its pipeline and its golden tests
 (``wallaby2caom2/main_app.py:126,159-198``).
 """
@@ -168,8 +168,8 @@ def predict_from_buckets(
 ) -> tuple[np.ndarray, np.ndarray]:
     # Single implementation lives in textscore.score_from_buckets (fused
     # row-major gather shared with the perplexity LM — see that module's
-    # docstring for the cache-line analysis); this wrapper keeps the split
-    # API for the oracle labeler and the composable langid_stage.
+    # docstring for the cache-line analysis); this wrapper keeps the
+    # langid-only API for the oracle labeler.
     from .textscore import score_from_buckets
 
     langs, confs, _ = score_from_buckets(bucket_list)

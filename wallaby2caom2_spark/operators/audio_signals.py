@@ -14,26 +14,37 @@ Numerically identical to the standalone operators (same helper functions:
 the float conversion is the same /32767 scaling ``decode_clip`` applies),
 pinned by tests/test_audio_signals.py.
 
-Spark shape: one ``mapInPandas`` projection on the scan, payload dies in
-the worker, ~60 bytes/clip out, no shuffle. Undecodable / rateless clips
+Spark shape: one projection on the scan (``mapInPandas`` for the
+standalone pass, ``mapInArrow`` for ``quality_and_signals``), payload dies
+in the worker, ~60 bytes/clip out, no shuffle. Undecodable / rateless clips
 emit ``sig_ok=false`` containment rows.
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
+from ..config import DEFAULT_CONFIG
 from ..functions import audio
+from .fused_stage import (
+    DECODE_FIELDS,
+    FUSED_PA_SCHEMA,
+    PASSTHROUGH_FIELDS,
+    _binary_views,
+    quality_arrays,
+)
 from .spectral import _clip_spectrum
 from .vad import _clip_vad
 
-if TYPE_CHECKING:  # annotation-only: avoids a config import at worker load
-    from ..config import PipelineConfig
+# VAD framing shared by both passes (20 ms frames, 10 ms hop, 10 dB gate)
+FRAME_MS, HOP_MS, GATE_DB = 20, 10, 10.0
 
 SIGNALS_SCHEMA = T.StructType(
     [
@@ -52,6 +63,12 @@ SIGNALS_SCHEMA = T.StructType(
         T.StructField("peak_share", T.DoubleType()),
     ]
 )
+
+_SIGNALS_PA = to_arrow_schema(SIGNALS_SCHEMA)
+_QUALITY_SIGNALS_PA = pa.schema(
+    list(FUSED_PA_SCHEMA) + [f for f in _SIGNALS_PA if f.name != "clip_id"]
+)
+QUALITY_SIGNALS_SCHEMA = from_arrow_schema(_QUALITY_SIGNALS_PA)
 
 
 class _SignalArrays:
@@ -74,7 +91,14 @@ class _SignalArrays:
         self.peak = np.zeros(n, dtype=np.float64)
 
     def fill_row(
-        self, i: int, raw, codec, sr_decl, frame_ms: int, hop_ms: int, gate_db: float
+        self,
+        i: int,
+        raw,
+        codec,
+        sr_decl,
+        frame_ms: int = FRAME_MS,
+        hop_ms: int = HOP_MS,
+        gate_db: float = GATE_DB,
     ) -> None:
         """Decode one clip (zero-copy int16 view) and write every gate
         signal for row ``i``; undecodable / rateless clips leave the
@@ -142,9 +166,9 @@ class _SignalArrays:
 
 def audio_signals(
     df: DataFrame,
-    frame_ms: int = 20,
-    hop_ms: int = 10,
-    gate_db: float = 10.0,
+    frame_ms: int = FRAME_MS,
+    hop_ms: int = HOP_MS,
+    gate_db: float = GATE_DB,
 ) -> DataFrame:
     """(clip_id, bytes, codec, sr_hz) → every gate signal, one decode."""
 
@@ -163,47 +187,8 @@ def audio_signals(
     return df.select(*cols).mapInPandas(_run, SIGNALS_SCHEMA)
 
 
-QUALITY_SIGNALS_SCHEMA = T.StructType(
-    [
-        T.StructField("clip_id", T.StringType()),
-        T.StructField("sr_hz", T.IntegerType()),
-        T.StructField("dur_ms", T.IntegerType()),
-        T.StructField("codec", T.StringType()),
-        T.StructField("transcript", T.StringType()),
-        # quality-filter features (same fields the fused flagship stage emits)
-        T.StructField("pcm_ok", T.BooleanType()),
-        T.StructField("sr_meas", T.IntegerType()),
-        T.StructField("dur_ms_meas", T.IntegerType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("clip_rate", T.DoubleType()),
-        T.StructField("dropout_ms", T.DoubleType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("lang_conf", T.FloatType()),
-        T.StructField("ppl", T.DoubleType()),
-        T.StructField("scrubbed_all", T.StringType()),
-        T.StructField("scrub_edits_all", T.IntegerType()),
-    ]
-    + [f for f in SIGNALS_SCHEMA.fields if f.name != "clip_id"]
-)
-
-
-def _opt_int(value) -> int | None:
-    """Nullable declared-metadata value → int or None (pandas hands a
-    nullable int32 column over as float64-with-NaN or object-with-None;
-    the cascade's NULL semantics need the distinction ``declared_sr``
-    collapses away)."""
-    if value is None or value != value:
-        return None
-    return int(value)
-
-
 def quality_and_signals(
-    df: DataFrame,
-    frame_ms: int = 20,
-    hop_ms: int = 10,
-    gate_db: float = 10.0,
-    signals_for_dropped: bool = False,
-    cfg: "PipelineConfig | None" = None,
+    df: DataFrame, signals_for_dropped: bool = False
 ) -> DataFrame:
     """The curation DAG's single payload pass: quality-filter features AND
     every audio gate signal from ONE decode of ONE scan.
@@ -212,9 +197,10 @@ def quality_and_signals(
     clips, then ``audio_signals`` over survivors) stitched by a
     ``clips ⋈ kept_ids`` semi-join — a second full read of the payload
     column and, past broadcast scale, a payload shuffle. This pass reads
-    each clip once, computes the decode-sanity struct
-    (``audio.decode_features`` — byte-identical to the flagship stage), the
-    text models, and the fingerprint/VAD/spectral signals (shared
+    each clip once (one ``mapInArrow`` crossing, payloads read zero-copy),
+    computes the quality features with the fused stage's kernel
+    (``fused_stage.quality_arrays`` — the same code as the flagship
+    stage) and the fingerprint/VAD/spectral signals (shared
     ``_SignalArrays`` helper — byte-identical to ``audio_signals``), so the
     whole funnel downstream is codegen + slim joins.
 
@@ -235,82 +221,58 @@ def quality_and_signals(
     tests/test_audio_signals.py::test_gated_signals_match_for_kept_clips
     and test_curate.py — identical ``_staged`` output either way).
 
-    Two gate safeguards: (1) ``cfg`` must be the SAME config the consumer
-    passes to ``cascade.with_keep_drop`` (defaults to ``DEFAULT_CONFIG``,
-    like the cascade) — a mismatched pair would silently skip signals for
-    clips the cascade keeps; (2) a predicted ``repetition`` drop does NOT
-    skip, because that is the one rule whose input (``rep_ratio``) the
-    worker re-derives via ``str.split()`` while the cascade tokenizes with
-    codegen ``(?U)\\S+`` — the two disagree on exotic control characters
-    (U+001C-001F), and every OTHER rule compares the bit-identical values
-    this pass itself emits, so only ``repetition`` could mispredict.
+    Two gate safeguards: (1) the gate decides with ``DEFAULT_CONFIG``, the
+    config the curation DAG passes to ``cascade.with_keep_drop`` — a
+    consumer cascading with another config must pass
+    ``signals_for_dropped=True``, or clips it keeps could lack signals;
+    (2) a predicted ``repetition`` drop does NOT skip, because that is the
+    one rule whose input (``rep_ratio``) the worker re-derives via
+    ``str.split()`` while the cascade tokenizes with codegen ``(?U)\\S+`` —
+    the two disagree on exotic control characters (U+001C-001F), and every
+    OTHER rule compares the bit-identical values this pass itself emits,
+    so only ``repetition`` could mispredict.
 
     The container header is parsed twice per clip (decode_features + the
     signal decode) — both return zero-copy int16 views, so no sample data
     is copied either time."""
-    from ..config import DEFAULT_CONFIG
 
-    gate_cfg = cfg if cfg is not None else DEFAULT_CONFIG
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import scrub, textscore
+    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..oracle import drop_reason_from_features, transcript_shape
 
-        for pdf in batches:
-            n = len(pdf)
-            ok = np.zeros(n, dtype=bool)
-            srm = np.zeros(n, dtype=np.int32)
-            dur = np.zeros(n, dtype=np.int32)
-            rms = np.zeros(n, dtype=np.float64)
-            clip = np.zeros(n, dtype=np.float64)
-            dropm = np.zeros(n, dtype=np.float64)
+        for batch in batches:
+            cols = dict(zip(batch.schema.names, batch.columns))
+            feats = quality_arrays(
+                cols["bytes"], cols["codec"], cols["sr_hz"], cols["transcript"]
+            )
+            n = batch.num_rows
             sig = _SignalArrays(n)
-            texts = [
-                t if isinstance(t, str) else None for t in pdf["transcript"]
-            ]
-            # text models first: the skip-dropped gate needs lang/ppl
-            langs, confs, ppls = textscore.score_batch(texts)
-            out_t, out_n = scrub.scrub_batch(texts)
-            dur_decl = pdf["dur_ms"].to_numpy()
-            for i, (raw, codec, sr_decl) in enumerate(
-                zip(pdf["bytes"], pdf["codec"], pdf["sr_hz"])
-            ):
-                sr_d = audio.declared_sr(sr_decl)
-                o, s, d, r, c, dm = audio.decode_features(raw, codec, sr_d)
-                ok[i], srm[i], dur[i], rms[i], clip[i], dropm[i] = (
-                    o, s, d, r, c, dm,
-                )
+            # to_pylist hands NULL declared metadata over as None — the
+            # three-valued input the cascade's rules expect
+            codecs, srs, durs, texts = (
+                cols[c].to_pylist() for c in ("codec", "sr_hz", "dur_ms", "transcript")
+            )
+            nd = len(DECODE_FIELDS)
+            decoded = list(zip(*(a.to_pylist() for a in feats[:nd])))
+            langs, confs, ppls = (a.to_pylist() for a in feats[nd : nd + 3])
+            for i, view in enumerate(_binary_views(cols["bytes"])):
                 if not signals_for_dropped:
-                    n_chars, rep_ratio = transcript_shape(texts[i])
                     reason = drop_reason_from_features(
-                        codec, _opt_int(sr_decl), _opt_int(dur_decl[i]),
-                        o, s, d, r, c, dm, n_chars, rep_ratio,
-                        ppls[i], langs[i], confs[i], gate_cfg,
+                        codecs[i], srs[i], durs[i], *decoded[i],
+                        *transcript_shape(texts[i]),
+                        ppls[i], langs[i], confs[i], DEFAULT_CONFIG,
                     )
                     if reason is not None and reason != "repetition":
                         continue  # containment defaults, like undecodable
-                sig.fill_row(i, raw, codec, sr_decl, frame_ms, hop_ms, gate_db)
-            yield pd.DataFrame(
-                {
-                    "clip_id": pdf["clip_id"],
-                    "sr_hz": pdf["sr_hz"],
-                    "dur_ms": pdf["dur_ms"],
-                    "codec": pdf["codec"],
-                    "transcript": pdf["transcript"],
-                    "pcm_ok": ok,
-                    "sr_meas": srm,
-                    "dur_ms_meas": dur,
-                    "rms": rms,
-                    "clip_rate": clip,
-                    "dropout_ms": dropm,
-                    "lang": langs,
-                    "lang_conf": confs,
-                    "ppl": ppls,
-                    "scrubbed_all": pd.array(out_t, dtype="string"),
-                    "scrub_edits_all": pd.array(out_n, dtype="int32"),
-                    **sig.columns(n),
-                }
+                sig.fill_row(i, view, codecs[i], srs[i])
+            yield pa.RecordBatch.from_arrays(
+                [cols[f.name] for f in PASSTHROUGH_FIELDS]
+                + feats
+                + [
+                    pa.array(v, type=_SIGNALS_PA.field(k).type)
+                    for k, v in sig.columns(n).items()
+                ],
+                schema=_QUALITY_SIGNALS_PA,
             )
 
     cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"]
-    return df.select(*cols).mapInPandas(_run, QUALITY_SIGNALS_SCHEMA)
+    return df.select(*cols).mapInArrow(_run, QUALITY_SIGNALS_SCHEMA)

@@ -1,4 +1,4 @@
-"""Vectorized audio-decode stage (Arrow-batched pandas UDF).
+"""Vectorized audio-decode stage (scalar Arrow UDF over the fused kernel).
 
 Reference analog: the per-file header read S5 — ``FileMetadataReader`` /
 ``make_headers_from_file`` (``wallaby2caom2/tests/test_caom_gen_visit.py:99-102``)
@@ -7,69 +7,29 @@ job: an undecodable payload yields ``pcm_ok=false`` (the reference's
 per-item try/except containment, ``wallaby2caom2/main_app.py:256-263``).
 
 The UDF crosses JVM→Python once per Arrow batch (sized by
-``spark.sql.execution.arrow.maxRecordsPerBatch`` to ~10MB of ``bytes``);
-inside the batch, per-clip decode is numpy-vectorized over samples.
+``spark.sql.execution.arrow.maxRecordsPerBatch`` to ~10MB of ``bytes``) and
+runs ``fused_stage.decode_arrays`` — the same decode the quality filter
+uses, reading each payload zero-copy out of the batch.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..functions import audio
-
-DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("pcm_ok", T.BooleanType()),
-        T.StructField("sr_meas", T.IntegerType()),
-        T.StructField("dur_ms_meas", T.IntegerType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("clip_rate", T.DoubleType()),
-        T.StructField("dropout_ms", T.DoubleType()),
-    ]
-)
+from .fused_stage import DECODE_FIELDS, decode_arrays
 
 
-@F.pandas_udf(DECODE_SCHEMA)
+@F.arrow_udf(from_arrow_schema(DECODE_FIELDS))
 def decode_features_udf(
-    batches: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
-) -> Iterator[pd.DataFrame]:
-    """(bytes, codec, sr_hz) → decode-sanity struct, iterator form so any
-    future per-worker init (e.g. a real FLAC decoder) is amortized."""
-    for payload, codec, sr in batches:
-        n = len(payload)
-        ok = np.zeros(n, dtype=bool)
-        srm = np.zeros(n, dtype=np.int32)
-        dur = np.zeros(n, dtype=np.int32)
-        rms = np.zeros(n, dtype=np.float64)
-        clip = np.zeros(n, dtype=np.float64)
-        drop = np.zeros(n, dtype=np.float64)
-        codec_v = codec.to_numpy()
-        sr_v = sr.to_numpy()
-        for i, raw in enumerate(payload.to_numpy()):
-            # NULL declared rate arrives as NaN through pandas — contained
-            # by the shared NULL-safe cast (see audio.declared_sr)
-            o, s, d, r, c, dm = audio.decode_features(
-                bytes(raw) if raw is not None else None,
-                codec_v[i],
-                audio.declared_sr(sr_v[i]),
-            )
-            ok[i], srm[i], dur[i], rms[i], clip[i], drop[i] = o, s, d, r, c, dm
-        yield pd.DataFrame(
-            {
-                "pcm_ok": ok,
-                "sr_meas": srm,
-                "dur_ms_meas": dur,
-                "rms": rms,
-                "clip_rate": clip,
-                "dropout_ms": drop,
-            }
-        )
+    payload: pa.Array, codec: pa.Array, sr_hz: pa.Array
+) -> pa.Array:
+    """(bytes, codec, sr_hz) → decode-sanity struct."""
+    return pa.StructArray.from_arrays(
+        decode_arrays(payload, codec, sr_hz), fields=list(DECODE_FIELDS)
+    )
 
 
 def with_decode_features(df: DataFrame) -> DataFrame:

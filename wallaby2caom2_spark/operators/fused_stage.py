@@ -1,28 +1,34 @@
-"""Single-crossing UDF stage: decode + langid + perplexity + scrub in ONE
-mapInArrow pass.
+"""The quality-feature kernel and its Spark wrappers: decode sanity +
+langid + perplexity + unmasked scrub in ONE Arrow crossing per batch.
 
-Why one crossing: chained pandas UDFs (decode → text models) each round-trip
-every batch JVM→Arrow→Python→Arrow→JVM. On a bandwidth-bound host the extra
+Kernel: ``decode_arrays`` (the 6 decode-sanity columns) and
+``quality_arrays`` (those plus the 5 text-model columns) take and return
+``pa.Array``s. Every Spark form of the stage calls them, so the feature
+loop and the field list (``DECODE_FIELDS`` + ``TEXT_FIELDS``) exist once:
+
+- ``fused_features_arrow`` (mapInArrow, ``with_fused_features``) — slim
+  rows WITHOUT the payload (the binary column dies inside the worker, so
+  it never crosses back or shuffles);
+- ``fused_features_udf`` (scalar Arrow UDF,
+  ``with_fused_features_retaining``) — the payload stays in the JVM row;
+- ``operators/decode.py`` ``decode_features_udf`` — decode columns only;
+- ``operators/audio_signals.py`` ``quality_and_signals`` — the curation
+  DAG's single payload pass, which adds the gate signals.
+
+Why one crossing: chained UDFs (decode → text models) each round-trip every
+batch JVM→Arrow→Python→Arrow→JVM. On a bandwidth-bound host the extra
 memcpy is the difference between 3x and 4x scaling at 32 cores — and at
-10^12 rows it is pure waste. This stage reads each Arrow batch once,
-computes every python-side feature, and returns slim rows WITHOUT the
-payload bytes (the binary column dies inside the worker, so it never
-crosses back or shuffles).
+10^12 rows it is pure waste.
 
-Why mapInArrow rather than mapInPandas: the Arrow→pandas conversion of the
-binary column materializes one Python ``bytes`` object per clip — a ~50 KB
+Why Arrow rather than pandas: the Arrow→pandas conversion of the binary
+column materializes one Python ``bytes`` object per clip — a ~50 KB
 allocation + memcpy per row that measured ~2.0s of a 6.1s sf0.1/local[32]
-pipeline run (profiled via a no-op mapInPandas over ``bytes`` vs the same
-scan JVM-side). Operating on the raw Arrow RecordBatch instead lets decode
-read each payload as a ZERO-COPY memoryview into the batch's data buffer
-(offsets sliced from the offsets buffer), and the passthrough columns
-(clip_id, codec, transcript, declared sr/dur) are re-emitted as the input's
-own Arrow arrays — no conversion in either direction. Only the computed
-feature vectors are newly allocated.
-
-Semantics are identical to operators/decode.py + operators/text_stage.py
-(shared functions/ modules); the split stages remain for composability and
-are covered by the same golden tests (tests/test_fused_equivalence.py).
+pipeline run (profiled via a no-op pandas-converting pass over ``bytes``
+vs the same scan JVM-side). Operating on the raw Arrow arrays instead lets decode read
+each payload as a ZERO-COPY memoryview into the batch's data buffer
+(``_binary_views``), and the passthrough columns are re-emitted as the
+input's own Arrow arrays — no conversion in either direction. Only the
+computed feature vectors are newly allocated.
 """
 
 from __future__ import annotations
@@ -30,32 +36,45 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
-FUSED_SCHEMA = T.StructType(
+# the one declaration of the quality-feature columns; every Spark and Arrow
+# schema of the stage is derived from these
+DECODE_FIELDS = pa.schema(
     [
-        T.StructField("clip_id", T.StringType()),
-        T.StructField("sr_hz", T.IntegerType()),
-        T.StructField("dur_ms", T.IntegerType()),
-        T.StructField("codec", T.StringType()),
-        T.StructField("transcript", T.StringType()),
-        T.StructField("pcm_ok", T.BooleanType()),
-        T.StructField("sr_meas", T.IntegerType()),
-        T.StructField("dur_ms_meas", T.IntegerType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("clip_rate", T.DoubleType()),
-        T.StructField("dropout_ms", T.DoubleType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("lang_conf", T.FloatType()),
-        T.StructField("ppl", T.DoubleType()),
-        T.StructField("scrubbed_all", T.StringType()),
-        T.StructField("scrub_edits_all", T.IntegerType()),
+        ("pcm_ok", pa.bool_()),
+        ("sr_meas", pa.int32()),
+        ("dur_ms_meas", pa.int32()),
+        ("rms", pa.float64()),
+        ("clip_rate", pa.float64()),
+        ("dropout_ms", pa.float64()),
     ]
 )
+TEXT_FIELDS = pa.schema(
+    [
+        ("lang", pa.string()),
+        ("lang_conf", pa.float32()),
+        ("ppl", pa.float64()),
+        ("scrubbed_all", pa.string()),
+        ("scrub_edits_all", pa.int32()),
+    ]
+)
+QUALITY_FIELDS = pa.schema(list(DECODE_FIELDS) + list(TEXT_FIELDS))
+# input columns re-emitted unchanged next to the features
+PASSTHROUGH_FIELDS = pa.schema(
+    [
+        ("clip_id", pa.string()),
+        ("sr_hz", pa.int32()),
+        ("dur_ms", pa.int32()),
+        ("codec", pa.string()),
+        ("transcript", pa.string()),
+    ]
+)
+FUSED_PA_SCHEMA = pa.schema(list(PASSTHROUGH_FIELDS) + list(QUALITY_FIELDS))
+FUSED_SCHEMA = from_arrow_schema(FUSED_PA_SCHEMA)
 
 
 def _binary_views(arr: pa.Array) -> list:
@@ -81,75 +100,59 @@ def _binary_views(arr: pa.Array) -> list:
     ]
 
 
-_OUT_PA_SCHEMA = pa.schema(
-    [
-        pa.field("clip_id", pa.string()),
-        pa.field("sr_hz", pa.int32()),
-        pa.field("dur_ms", pa.int32()),
-        pa.field("codec", pa.string()),
-        pa.field("transcript", pa.string()),
-        pa.field("pcm_ok", pa.bool_()),
-        pa.field("sr_meas", pa.int32()),
-        pa.field("dur_ms_meas", pa.int32()),
-        pa.field("rms", pa.float64()),
-        pa.field("clip_rate", pa.float64()),
-        pa.field("dropout_ms", pa.float64()),
-        pa.field("lang", pa.string()),
-        pa.field("lang_conf", pa.float32()),
-        pa.field("ppl", pa.float64()),
-        pa.field("scrubbed_all", pa.string()),
-        pa.field("scrub_edits_all", pa.int32()),
+def decode_arrays(
+    payload: pa.Array, codec: pa.Array, sr_hz: pa.Array
+) -> list[pa.Array]:
+    """(bytes, codec, declared sr_hz) → the ``DECODE_FIELDS`` columns.
+    Undecodable payloads yield ``pcm_ok=false`` rows, never an error (the
+    reference's per-item try/except containment). A NULL declared rate is
+    "no declared rate" (0): the measured rate wins, and rateless clips fail
+    sanity."""
+    from ..functions import audio
+
+    codecs = codec.to_pylist()
+    srs = sr_hz.fill_null(0).to_numpy(zero_copy_only=False)
+    rows = [
+        audio.decode_features(view, codecs[i], int(srs[i]))
+        for i, view in enumerate(_binary_views(payload))
     ]
-)
+    return [
+        pa.array([r[j] for r in rows], type=f.type)
+        for j, f in enumerate(DECODE_FIELDS)
+    ]
+
+
+def quality_arrays(
+    payload: pa.Array, codec: pa.Array, sr_hz: pa.Array, transcript: pa.Array
+) -> list[pa.Array]:
+    """``decode_arrays`` + the ``TEXT_FIELDS`` columns (langid, perplexity
+    and the scrub of EVERY row; the cascade masks dropped rows later)."""
+    # worker-side imports: models/tables built once per python worker process
+    from ..functions import scrub, textscore
+
+    texts = transcript.to_pylist()
+    langs, confs, ppls = textscore.score_batch(texts)  # hash+gather once
+    out_t, out_n = scrub.scrub_batch(texts)
+    return decode_arrays(payload, codec, sr_hz) + [
+        pa.array(langs.tolist(), type=pa.string()),
+        pa.array(confs, type=pa.float32()),
+        pa.array(ppls, type=pa.float64()),
+        pa.array(out_t, type=pa.string()),
+        pa.array(out_n, type=pa.int32()),
+    ]
 
 
 def fused_features_arrow(
     batches: Iterator[pa.RecordBatch],
 ) -> Iterator[pa.RecordBatch]:
-    # worker-side imports: models/tables built once per python worker process
-    from ..functions import audio, scrub, textscore
-
     for batch in batches:
-        cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-        n = batch.num_rows
-        ok = np.zeros(n, dtype=bool)
-        srm = np.zeros(n, dtype=np.int32)
-        dur = np.zeros(n, dtype=np.int32)
-        rms = np.zeros(n, dtype=np.float64)
-        clip = np.zeros(n, dtype=np.float64)
-        dropm = np.zeros(n, dtype=np.float64)
-        codec_v = cols["codec"].to_pylist()
-        # fill_null(0): a NULL declared rate must land as "no rate" (decode
-        # fails sanity anyway), not as a NaN that breaks the int() cast
-        sr_v = cols["sr_hz"].fill_null(0).to_numpy(zero_copy_only=False)
-        for i, view in enumerate(_binary_views(cols["bytes"])):
-            o, s, d, r, c, dm = audio.decode_features(view, codec_v[i], int(sr_v[i]))
-            ok[i], srm[i], dur[i], rms[i], clip[i], dropm[i] = o, s, d, r, c, dm
-
-        texts = cols["transcript"].to_pylist()
-        langs, confs, ppls = textscore.score_batch(texts)  # hash+gather once
-        out_t, out_n = scrub.scrub_batch(texts)
-
+        cols = dict(zip(batch.schema.names, batch.columns))
+        feats = quality_arrays(
+            cols["bytes"], cols["codec"], cols["sr_hz"], cols["transcript"]
+        )
         yield pa.RecordBatch.from_arrays(
-            [
-                cols["clip_id"],
-                cols["sr_hz"],
-                cols["dur_ms"],
-                cols["codec"],
-                cols["transcript"],
-                pa.array(ok),
-                pa.array(srm),
-                pa.array(dur),
-                pa.array(rms),
-                pa.array(clip),
-                pa.array(dropm),
-                pa.array(langs.tolist(), type=pa.string()),
-                pa.array(confs),
-                pa.array(ppls),
-                pa.array(out_t, type=pa.string()),
-                pa.array(out_n, type=pa.int32()),
-            ],
-            schema=_OUT_PA_SCHEMA,
+            [cols[f.name] for f in PASSTHROUGH_FIELDS] + feats,
+            schema=FUSED_PA_SCHEMA,
         )
 
 
@@ -164,72 +167,23 @@ def with_fused_features(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# payload-retaining variant (scalar pandas UDF)
+# payload-retaining variant (scalar Arrow UDF)
 # ---------------------------------------------------------------------------
 
-FUSED_UDF_SCHEMA = T.StructType(
-    [
-        T.StructField("pcm_ok", T.BooleanType()),
-        T.StructField("sr_meas", T.IntegerType()),
-        T.StructField("dur_ms_meas", T.IntegerType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("clip_rate", T.DoubleType()),
-        T.StructField("dropout_ms", T.DoubleType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("lang_conf", T.FloatType()),
-        T.StructField("ppl", T.DoubleType()),
-        T.StructField("scrubbed_all", T.StringType()),
-        T.StructField("scrub_edits_all", T.IntegerType()),
-    ]
-)
 
-
-@F.pandas_udf(FUSED_UDF_SCHEMA)
+@F.arrow_udf(from_arrow_schema(QUALITY_FIELDS))
 def fused_features_udf(
-    batches: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series]],
-) -> Iterator[pd.DataFrame]:
+    payload: pa.Array, codec: pa.Array, sr_hz: pa.Array, transcript: pa.Array
+) -> pa.Array:
     """Scalar-UDF form of the fused stage: same ONE JVM→Python crossing, but
     the original row — including the payload — stays JVM-side. The payload
     is serialized INTO the worker once (the decode needs the bytes anyway)
     and only the slim feature struct comes back: nothing payload-sized ever
-    re-crosses Arrow or enters an exchange. Semantics are shared with the
-    mapInArrow form (same functions/ helpers), pinned by
-    tests/test_fused_equivalence.py."""
-    from ..functions import audio, scrub, textscore
-
-    for payload, codec, sr, transcript in batches:
-        n = len(payload)
-        ok = np.zeros(n, dtype=bool)
-        srm = np.zeros(n, dtype=np.int32)
-        dur = np.zeros(n, dtype=np.int32)
-        rms = np.zeros(n, dtype=np.float64)
-        clip = np.zeros(n, dtype=np.float64)
-        dropm = np.zeros(n, dtype=np.float64)
-        codec_v = codec.to_numpy()
-        sr_v = sr.to_numpy()
-        for i, raw in enumerate(payload.to_numpy()):
-            o, s, d, r, c, dm = audio.decode_features(
-                raw, codec_v[i], audio.declared_sr(sr_v[i])
-            )
-            ok[i], srm[i], dur[i], rms[i], clip[i], dropm[i] = o, s, d, r, c, dm
-        texts = [t if isinstance(t, str) else None for t in transcript.to_numpy()]
-        langs, confs, ppls = textscore.score_batch(texts)
-        out_t, out_n = scrub.scrub_batch(texts)
-        yield pd.DataFrame(
-            {
-                "pcm_ok": ok,
-                "sr_meas": srm,
-                "dur_ms_meas": dur,
-                "rms": rms,
-                "clip_rate": clip,
-                "dropout_ms": dropm,
-                "lang": langs,
-                "lang_conf": confs,
-                "ppl": ppls,
-                "scrubbed_all": pd.array(out_t, dtype="string"),
-                "scrub_edits_all": pd.array(out_n, dtype="int32"),
-            }
-        )
+    re-crosses Arrow or enters an exchange."""
+    return pa.StructArray.from_arrays(
+        quality_arrays(payload, codec, sr_hz, transcript),
+        fields=list(QUALITY_FIELDS),
+    )
 
 
 def with_fused_features_retaining(df: DataFrame) -> DataFrame:

@@ -1,69 +1,21 @@
-"""Fused text-model stage: langid + perplexity + scrub in ONE Arrow crossing.
+"""Post-cascade scrub mask.
 
-The pipeline's transcripts are ~1.5 KB/row; at 10^12 rows each extra
-JVM↔Python crossing re-serializes the whole text column. langid/perplexity
-(operators/langid_stage.py) and scrub (operators/scrub_stage.py) both take
-only ``transcript`` — fusing them halves the Python-bound text traffic while
-keeping identical semantics (scrub is computed for every row and masked to
-NULL for dropped rows afterwards, exactly like the split stages).
-
-The split stages remain for composability; plans/pipeline.py uses this fused
-one.
+The fused quality stage (operators/fused_stage.py) scrubs EVERY row's
+transcript in the same Arrow crossing as decode and the text models
+(``scrubbed_all`` / ``scrub_edits_all``); the keep decision only exists
+after the codegen cascade, so the mask that exposes scrub output for kept
+rows alone runs here, as plain column expressions.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-TEXT_SCHEMA = T.StructType(
-    [
-        T.StructField("lang", T.StringType()),
-        T.StructField("lang_conf", T.FloatType()),
-        T.StructField("ppl", T.DoubleType()),
-        T.StructField("scrubbed_all", T.StringType()),
-        T.StructField("scrub_edits_all", T.IntegerType()),
-    ]
-)
-
-
-@F.pandas_udf(TEXT_SCHEMA)
-def text_models_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    # imports run on the executor python worker, once per process (iterator
-    # form = model tables touched once per worker, not per batch)
-    from ..functions import scrub, textscore
-
-    for transcripts in batches:
-        texts = [t if isinstance(t, str) else None for t in transcripts.to_numpy()]
-        langs, confs, ppls = textscore.score_batch(texts)  # hash+gather once
-        out_t, out_n = scrub.scrub_batch(texts)
-        yield pd.DataFrame(
-            {
-                "lang": langs,
-                "lang_conf": confs,
-                "ppl": ppls,
-                "scrubbed_all": pd.array(out_t, dtype="string"),
-                "scrub_edits_all": pd.array(out_n, dtype="int32"),
-            }
-        )
-
-
-def with_text_models(df: DataFrame) -> DataFrame:
-    """Append lang/lang_conf/ppl + unmasked scrub fields."""
-    return (
-        df.withColumn("_txt", text_models_udf(F.col("transcript")))
-        .select("*", "_txt.*")
-        .drop("_txt")
-    )
 
 
 def mask_scrub(df: DataFrame, keep_col: str = "keep") -> DataFrame:
     """Post-cascade: kept rows expose the scrub output, dropped rows carry
-    NULL text / 0 edits (same contract as operators/scrub_stage.py)."""
+    NULL text / 0 edits (the oracle contract)."""
     return (
         df.withColumn(
             "scrubbed_transcript",

@@ -4,12 +4,15 @@ dedup → split assignment → training-shard export.
 The full product in one plan — what a team curating a 10^12-clip ASR drop
 actually runs:
 
-1. **quality filter** (plans/pipeline.py): decode sanity + langid +
-   perplexity + rule cascade + PII scrub — one Arrow crossing, one slim
-   exchange.
-2. **audio gate pass** (operators/audio_signals.py): ONE more decode pass
-   over survivors computes fingerprint + VAD + spectral shape together;
-   clips that are tonal artifacts or carry no detected speech drop here.
+1. **quality filter**: decode sanity + langid + perplexity + rule
+   cascade + PII scrub (the quality features of plans/pipeline.py, from
+   the shared kernel in operators/fused_stage.py).
+2. **audio gates**: fingerprint + VAD + spectral shape; clips that are
+   tonal artifacts or carry no detected speech drop here. Steps 1 and 2
+   are ONE payload pass (operators/audio_signals.py
+   ``quality_and_signals``): a single decode of a single scan emits the
+   quality features and the gate signals together, and the signals are
+   computed only for clips the quality cascade keeps.
 3. **content dedup**: LSH-banded fingerprint join (operators/audio_fp.py)
    → pairwise min-id keeper election: for every near-dup pair the larger
    clip_id loses, so re-delivered/re-encoded copies collapse to one

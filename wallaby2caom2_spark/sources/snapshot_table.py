@@ -293,11 +293,16 @@ _REV_CONJUNCT_RE = re.compile(
     r"^\s*('(?:[^']|'')*'|-?\d+(?:\.\d+)?)\s*(<=|>=|<|>|=)\s*(\w+)\s*$"
 )
 _FLIP = {"<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "="}
+_STRING_LIT_RE = re.compile(r"'(?:[^']|'')*'")
 
 
 def _parse_literal(tok: str):
     tok = tok.strip()
-    if len(tok) >= 2 and tok[0] == "'" and tok[-1] == "'":
+    if tok.startswith("'"):
+        # only a well-formed literal: a fragment of one (an odd quote
+        # count) must not parse
+        if not _STRING_LIT_RE.fullmatch(tok):
+            return None
         return tok[1:-1].replace("''", "'")
     if tok.lower() in ("true", "false"):
         return tok.lower() == "true"
@@ -338,35 +343,36 @@ def _conjunct_excludes(col_stats: list, op: str, lit) -> bool:
 def prune_buckets(manifest: dict, where: str) -> list[int] | None:
     """Buckets that MAY hold rows matching ``where``, from the
     manifest's zone maps — or None when pruning cannot be proven safe
-    (disjunctions/parentheses/unparseable conjuncts on every column, or
-    a pre-stats manifest). Conservative by construction: only
-    top-level AND chains of ``col (<|<=|>|>=|=) literal`` conjuncts
-    participate; anything else keeps the bucket. The returned list
-    feeds ``_read_buckets`` — the same code path as explicit bucket
-    selection, so pruned reads stay on the ordinary scan plan."""
+    (OR/NOT/parentheses, any part that is not a supported conjunct, or
+    a pre-stats manifest). Conservative by construction: only predicates
+    that are wholly a top-level AND chain of ``col (<|<=|>|>=|=)
+    literal`` conjuncts prune; anything else reads every bucket. The
+    returned list feeds ``_read_buckets`` — the same code path as
+    explicit bucket selection, so pruned reads stay on the ordinary scan
+    plan."""
     stats: dict = manifest.get("stats") or {}
     if not stats:
         return None
-    low = where.lower()
-    if "(" in where or ")" in where or " or " in f" {low} " or " not " in f" {low} ":
+    # any whitespace (newline, tab) may separate a keyword: match words
+    if "(" in where or ")" in where or re.search(r"(?i)\b(or|not)\b", where):
         return None
     conjuncts = []
     for part in re.split(r"(?i)\s+and\s+", where.strip()):
         # reversed form first: "390 <= v" would otherwise match the
         # normal regex with "390" as the column name
         m = _REV_CONJUNCT_RE.match(part)
-        if m:
-            lit = _parse_literal(m.group(1))
-            if lit is not None:
-                conjuncts.append((m.group(3), _FLIP[m.group(2)], lit))
-                continue
+        lit = _parse_literal(m.group(1)) if m else None
+        if lit is not None:
+            conjuncts.append((m.group(3), _FLIP[m.group(2)], lit))
+            continue
         m = _CONJUNCT_RE.match(part)
-        if m and not m.group(1).isdigit():
-            lit = _parse_literal(m.group(3))
-            if lit is not None:
-                conjuncts.append((m.group(1), m.group(2), lit))
-    if not conjuncts:
-        return None
+        lit = _parse_literal(m.group(3)) if m and not m.group(1).isdigit() else None
+        if lit is None:
+            # all-or-nothing: an unparsed part may be a fragment of a
+            # string literal the AND split cut through, so the parts that
+            # did parse are not proven conjuncts of the predicate
+            return None
+        conjuncts.append((m.group(1), m.group(2), lit))
     all_buckets = set(manifest["buckets"]) | set(manifest.get("deltas", {}))
     kept = []
     for b in sorted(all_buckets, key=int):
@@ -479,7 +485,8 @@ def _read_buckets(
     """Assemble the table (or just ``buckets``) from the manifest's file
     pointers. A bucket with no manifest entry is EMPTY (sparse
     manifests), never an error; an entirely-empty selection returns a
-    typed empty frame from the manifest's recorded schema.
+    typed empty frame from the manifest's recorded schema, and recorded
+    columns no selected file holds read as typed NULLs.
 
     Buckets with pending merge-on-read deltas route through latest-wins
     resolution; buckets without keep the plain COW scan (no window, no
@@ -527,10 +534,19 @@ def _read_buckets(
     if clean is None and resolved is None:
         return _empty_frame(spark, manifest)
     if clean is None:
-        return resolved
-    if resolved is None:
-        return clean
-    return clean.unionByName(resolved, allowMissingColumns=True)
+        df = resolved
+    elif resolved is None:
+        df = clean
+    else:
+        df = clean.unionByName(resolved, allowMissingColumns=True)
+    # a selection whose files all predate a widening merge lacks the new
+    # columns; the table has them (NULL for those rows), so add them typed
+    if "schema" in manifest:
+        recorded = T.StructType.fromJson(json.loads(manifest["schema"]))
+        for f in recorded.fields:
+            if f.name not in df.columns:
+                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
+    return df
 
 
 def read_table(
