@@ -117,6 +117,9 @@ def test_curate_corpus_exports_valid_shards(spark, clips_df, tmp_path):
     }
     final = sum(v for k, v in funnel.items() if k.startswith("4_"))
     assert manifest["n_clips"] <= final
+    # the manifest carries the same funnel, computed by the run itself
+    assert manifest["funnel"] == funnel
+    assert sum(manifest["funnel"].values()) == clips_df.count()
     # idempotence: re-running converges to the same manifest
     again = curate.curate_corpus(spark, src, out, n_buckets=4)
     assert again == manifest

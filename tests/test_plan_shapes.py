@@ -20,12 +20,15 @@ from wallaby2caom2_spark.queries import ALL_QUERIES
 SF = "/root/testdata/sf0.001"
 
 
-def plan_of(spark, name: str) -> str:
-    df = ALL_QUERIES[name](spark, SF)
+def formatted(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def plan_of(spark, name: str) -> str:
+    return formatted(ALL_QUERIES[name](spark, SF))
 
 
 def count(plan: str, token: str) -> int:
@@ -258,6 +261,18 @@ def exchange_inputs(plan: str) -> list[tuple[str, str]]:
     return out
 
 
+def payload_exchanges(plan: str) -> list[tuple[str, str]]:
+    """The Exchange blocks of a formatted plan whose input lists a payload
+    column."""
+    import re
+
+    return [
+        (head, inp)
+        for head, inp in exchange_inputs(plan)
+        if set(re.findall(r"(\w+)#\d+", inp)) & PAYLOAD_COLS
+    ]
+
+
 @pytest.mark.parametrize("name", CLIPS_QUERIES)
 def test_no_payload_column_crosses_an_exchange(spark, name):
     """THE byte-shuffle contract (plans/pipeline.py module docstring), now
@@ -266,13 +281,39 @@ def test_no_payload_column_crosses_an_exchange(spark, name):
     input. Round 2 violated this latently — kept-clips payloads were
     re-attached by a semi-join that only AQE's broadcast kept off the wire;
     the narrow ``kept_clips`` recompute removes the join entirely."""
-    import re
+    bad = payload_exchanges(plan_of(spark, name))
+    assert not bad, f"{name}: payload in an exchange: {bad}"
 
-    plan = plan_of(spark, name)
-    for head, inp in exchange_inputs(plan):
-        cols = set(re.findall(r"(\w+)#\d+", inp))
-        bad = cols & PAYLOAD_COLS
-        assert not bad, f"{name}: {head} shuffles {bad}: {inp}"
+
+def test_curate_survivor_attach_broadcasts_computed_stage_frame(
+    spark, clips_df, tmp_path
+):
+    """plans/curate.py ``curate_corpus`` on a path read: the final-survivor
+    attach is planned after the stage frame is cached AND computed, so the
+    cached relation reports its real size, the slim id side is broadcast
+    and no payload column (source bytes or tensors) enters an exchange.
+    The same attach planned against the lazy stage frame puts the payload
+    scan into a shuffle — the order is what keeps it out."""
+    from wallaby2caom2_spark.plans import curate
+    from wallaby2caom2_spark.sources.clips import read_clips
+
+    src = str(tmp_path / "clips")
+    clips_df.write.parquet(src)
+    clips = read_clips(spark, src)
+    caches: list = []
+    staged = curate._staged(clips, caches).persist()
+    caches.append(staged)
+    try:
+        lazy = formatted(curate._survivor_shards(clips, staged, 4))
+        assert "SortMergeJoin LeftSemi" in lazy, lazy
+        assert payload_exchanges(lazy), lazy
+        curate._stage_counts(staged).collect()
+        plan = formatted(curate._survivor_shards(clips, staged, 4))
+        assert "BroadcastHashJoin LeftSemi" in plan, plan
+        assert not payload_exchanges(plan), plan
+    finally:
+        for df in caches:
+            df.unpersist()
 
 
 def test_kept_clips_is_zero_exchange_single_scan(spark):
@@ -282,11 +323,7 @@ def test_kept_clips_is_zero_exchange_single_scan(spark):
     from wallaby2caom2_spark.plans.pipeline import kept_clips
     from wallaby2caom2_spark.queries.clips_flagship import load_clips
 
-    df = kept_clips(load_clips(spark, SF))
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = formatted(kept_clips(load_clips(spark, SF)))
     assert count(plan, "Exchange") == 0, plan
     assert count(plan, "Location: InMemoryFileIndex") == 1, plan
 

@@ -300,3 +300,33 @@ def test_pruned_read_keeps_widened_columns(spark, table):
         assert sorted(map(tuple, got.select(*want.columns).collect())) == sorted(
             map(tuple, want.collect())
         ), p
+
+
+@pytest.mark.parametrize("pred", ["d > 1.0", "d < 1", "d >= 1.000000000000000001"])
+def test_decimal_bound_one_ulp_from_literal_is_not_pruned(spark, tmp_path, pred):
+    """decimal(38,18) values one ulp either side of 1: a float zone map
+    rounds both to 1.0, which would prove ``d > 1.0`` / ``d < 1`` false
+    for their buckets. Bounds round outward and literals parse exactly, so
+    a where-read still equals the filter while buckets holding only 1.0
+    stay prunable."""
+    from decimal import Decimal
+
+    rows = [(f"k{i:03d}", Decimal(1)) for i in range(40)] + [
+        ("above", Decimal("1.000000000000000001")),
+        ("below", Decimal("0.999999999999999999")),
+    ]
+    path = str(tmp_path / "dec_ulp")
+    st.create_table(
+        spark,
+        path,
+        spark.createDataFrame(rows, "clip_id string, d decimal(38,18)"),
+        key="clip_id",
+        n_buckets=8,
+    )
+    got = sorted(r["clip_id"] for r in st.read_table(spark, path, where=pred).collect())
+    want = sorted(
+        r["clip_id"] for r in st.read_table(spark, path).filter(pred).collect()
+    )
+    assert got == want and want, pred
+    m = st.read_manifest(path)
+    assert len(st.prune_buckets(m, pred)) < len(m["buckets"]), pred

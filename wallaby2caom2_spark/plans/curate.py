@@ -20,14 +20,20 @@ actually runs:
    the redelivery case; chains collapse onto their smallest reachable
    member or drop entirely, never duplicate. The CC operator in
    queries/dedup.py is the full-transitive alternative.)
-4. **split assignment**: deterministic xxhash64(clip_id) bucket →
+4. **split assignment**: deterministic md5(clip_id) bucket →
    train/valid/test (98/1/1) — layout-independent, so a backfill rerun
    never migrates a clip across the eval boundary (same contract as
    queries/curation.py's document split).
 5. **export**: scrubbed transcript ⋈ filterbank tensor (decode pass #3,
    tensors computed ONLY for final survivors — computing them before the
    gates would waste the expensive output on clips about to drop),
-   written as (split, bucket)-partitioned parquet + a JSON manifest.
+   written as (split, bucket)-partitioned parquet + a JSON manifest that
+   carries the per-stage funnel counts. The stage frame is materialized
+   (by that funnel count) BEFORE the survivor attach is planned, so the
+   planner sees the cached id side's real size and broadcasts it whenever
+   it fits ``spark.sql.autoBroadcastJoinThreshold``: the payload scan then
+   feeds the semi-join, the filterbank pass and the write in its own
+   partitions and never enters an exchange.
 
 Every stage is keyed equi-joins + narrow UDF passes; the funnel summary
 (`curation_funnel`) labels each input clip with the FIRST stage that
@@ -115,9 +121,10 @@ def _staged(
     # the cached rows, so the UDF pass executes exactly once per action.
     # Payload-free (~100 B/clip + transcript), so caching costs ~0.01% of
     # the corpus. Lifetime: the cache must outlive the returned LAZY frame,
-    # so _staged cannot unpersist — callers that fully materialize
-    # (curate_corpus) clean up via ``caches``; lazy callers (the funnel
-    # query) leave the slim blocks to Spark's LRU.
+    # so _staged cannot unpersist. curate_corpus persists the returned
+    # frame too, fills both caches with its funnel count, and unpersists
+    # them via ``caches`` once the export is written; lazy callers (the
+    # funnel query) leave the slim blocks to Spark's LRU.
     labeled = (
         quality_and_signals(clips, signals_for_dropped=signals_for_dropped)
         .transform(cascade.with_transcript_stats)
@@ -164,13 +171,52 @@ def _staged(
     )
 
 
+def _stage_counts(staged: DataFrame) -> DataFrame:
+    """(stage, n_clips) over a ``_staged`` frame — one small aggregate."""
+    return staged.groupBy("stage").agg(F.count("*").alias("n_clips"))
+
+
 def curation_funnel(clips: DataFrame) -> DataFrame:
     """Per-stage clip counts — the curation run's north-rule counters."""
-    return (
-        _staged(clips)
-        .groupBy("stage")
-        .agg(F.count("*").alias("n_clips"))
-        .orderBy("stage")
+    return _stage_counts(_staged(clips)).orderBy("stage")
+
+
+def _survivor_shards(
+    attach_side: DataFrame, staged: DataFrame, n_buckets: int
+) -> DataFrame:
+    """Export rows of the final survivors (the shard frame, uncached).
+
+    The payload enters through the one irreducible payload join of the
+    DAG, ``attach_side ⋈ final_ids`` (the dedup join decides the survivor
+    set, so no narrow recompute can reproduce it), and the filterbank
+    tensors are computed over its output only.
+
+    Call this only once ``staged`` is cached AND computed. The cached
+    relation then reports its real size, so the planner broadcasts the
+    slim id side and the slim final labels whenever they fit
+    ``spark.sql.autoBroadcastJoinThreshold``, and the payload rows stay in
+    the scan's partitions through the semi-join, the tensor pass and the
+    final join. Against a lazy ``staged`` the estimate is the payload
+    scan's: the semi-join plans as a sort-merge join with the payload in
+    an Exchange, and AQE can switch to a broadcast only after that
+    exchange has run. An id side too big to broadcast keeps the
+    sort-merge join."""
+    final = staged.filter(F.col("stage").startswith("4_")).select(
+        "clip_id",
+        "lang",
+        "scrubbed_transcript",
+        F.substring("stage", 3, 10).alias("split"),
+    )
+    survivors = attach_side.join(
+        final.select("clip_id"), "clip_id", "left_semi"
+    )
+    feats = feature_frames(survivors).filter(F.col("feat_ok"))
+    return with_bucket(
+        final.join(
+            feats.select("clip_id", "n_frames", "n_bands", "feat_bytes"),
+            "clip_id",
+        ),
+        n_buckets,
     )
 
 
@@ -182,18 +228,19 @@ def curate_corpus(
     clips_table: str | None = None,
 ) -> dict:
     """Run the full curation DAG and export (split, bucket)-partitioned
-    training shards + manifest. Returns the manifest dict.
+    training shards + manifest. Returns the manifest dict; its ``funnel``
+    maps every stage label to its clip count (the rows of
+    ``curation_funnel``).
 
-    The one irreducible payload join left in the DAG is the final-survivor
-    attach below (``clips ⋈ final_ids`` — the survivor set is decided by
-    the dedup join, so no narrow recompute can reproduce it). Pass
-    ``clips_table`` — a table written ``bucketBy(clip_id)``
-    (sources/bucketed.py) — to read the payload side with bucketing
-    metadata: the sort-merge join then exchanges ONLY the slim id side into
-    the existing buckets and the payload column never enters a shuffle
-    (plan pinned in tests/test_plan_shapes.py). Without it (path read),
-    correctness is identical but the payload side relies on AQE choosing a
-    broadcast of the id side — fine at sandbox scale, not at 10^12 rows."""
+    The one irreducible payload join of the DAG is the final-survivor
+    attach (``_survivor_shards``), planned after the funnel count has
+    computed the cached stage frame: a path read then broadcasts the slim
+    id side whenever it fits and the payload never enters an exchange
+    (plan pinned in tests/test_plan_shapes.py). An id side too large to
+    broadcast (10^12 rows) plans a sort-merge join; pass ``clips_table`` —
+    a table written ``bucketBy(clip_id)`` (sources/bucketed.py) — so that
+    join exchanges ONLY the slim id side into the existing buckets (plan
+    pinned in tests/test_bucketed.py)."""
     from pyspark.storagelevel import StorageLevel
 
     clips = read_clips(spark, clips_path)
@@ -204,33 +251,26 @@ def curate_corpus(
     # churn evicts live data
     caches: list[DataFrame] = []
     try:
-        # staged is slim and feeds two arms (final + the survivors
-        # semi-join); persisting it keeps the whole gate DAG at one
-        # execution
+        # staged is slim and feeds the funnel count, the final labels and
+        # the survivor attach; persisting it keeps the whole gate DAG at
+        # one execution. The funnel count must run before _survivor_shards
+        # is built: it computes the cache (see that docstring)
         staged = _staged(clips, caches).persist()
         caches.append(staged)
-        final = staged.filter(F.col("stage").startswith("4_")).select(
-            "clip_id",
-            "lang",
-            "scrubbed_transcript",
-            F.substring("stage", 3, 10).alias("split"),
+        funnel = dict(
+            sorted(
+                (r["stage"], int(r["n_clips"]))
+                for r in _stage_counts(staged).collect()
+            )
         )
-        survivors = attach_side.join(
-            final.select("clip_id"), "clip_id", "left_semi"
-        )
-        feats = feature_frames(survivors).filter(F.col("feat_ok"))
         # DISK_ONLY, not MEMORY: the shard frame carries the feature
         # tensors (KBs/clip) — caching it in executor memory would evict
         # the slim gate caches at corpus scale, but it IS consumed twice
         # (the written-set collect below + the write), and the feat_ok
         # filter makes any slimmer proxy for the written set inexact
-        shard = with_bucket(
-            final.join(
-                feats.select("clip_id", "n_frames", "n_bands", "feat_bytes"),
-                "clip_id",
-            ),
-            n_buckets,
-        ).persist(StorageLevel.DISK_ONLY)
+        shard = _survivor_shards(attach_side, staged, n_buckets).persist(
+            StorageLevel.DISK_ONLY
+        )
         caches.append(shard)
         # the partitions THIS run owns — dynamic overwrite replaces only
         # these, so the read-back below is checked against this exact set
@@ -276,7 +316,12 @@ def curate_corpus(
             f"export — clear {os.path.join(out_path, 'shards')} before "
             "re-exporting"
         )
-    manifest: dict = {"n_clips": 0, "n_buckets": n_buckets, "splits": {}}
+    manifest: dict = {
+        "n_clips": 0,
+        "n_buckets": n_buckets,
+        "funnel": funnel,
+        "splits": {},
+    }
     for r in per:
         s = manifest["splits"].setdefault(
             r["split"], {"n_clips": 0, "buckets": {}}

@@ -74,7 +74,9 @@ clobber a committed manifest.
 
 from __future__ import annotations
 
+import decimal
 import json
+import math
 import os
 import re
 import uuid
@@ -212,13 +214,18 @@ def _write_snapshot_files(
     return sid, written, stats
 
 
-def _json_safe(v):
-    """Stats values must survive the JSON manifest round trip."""
-    import decimal
-
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    return v
+def _json_safe(v, up: bool):
+    """Stats values must survive the JSON manifest round trip. A Decimal
+    becomes a float on the SAFE side of it — a max (``up``) rounds up, a
+    min rounds down: the nearest float can land past a value one decimal
+    ulp away, and a zone map narrower than its rows prunes buckets that
+    hold matches."""
+    if not isinstance(v, decimal.Decimal):
+        return v
+    f = float(v)
+    if (f < v) if up else (f > v):
+        f = math.nextafter(f, math.inf if up else -math.inf)
+    return f
 
 
 def _bucket_stats(df: DataFrame) -> dict:
@@ -248,8 +255,8 @@ def _bucket_stats(df: DataFrame) -> dict:
             "n_rows": r["_n"],
             "cols": {
                 c: [
-                    _json_safe(r[f"_min_{c}"]),
-                    _json_safe(r[f"_max_{c}"]),
+                    _json_safe(r[f"_min_{c}"], up=False),
+                    _json_safe(r[f"_max_{c}"], up=True),
                     r[f"_nulls_{c}"],
                 ]
                 for c in statable
@@ -310,10 +317,13 @@ def _parse_literal(tok: str):
         return int(tok)
     except ValueError:
         pass
+    # exact, not float: a float literal can round past a stats bound that
+    # the column value (compared exactly by Spark for decimals) does not
     try:
-        return float(tok)
-    except ValueError:
+        lit = decimal.Decimal(tok)
+    except decimal.InvalidOperation:
         return None
+    return lit if lit.is_finite() else None
 
 
 def _conjunct_excludes(col_stats: list, op: str, lit) -> bool:
@@ -335,7 +345,8 @@ def _conjunct_excludes(col_stats: list, op: str, lit) -> bool:
             return hi <= lit
         if op == ">=":
             return hi < lit
-    except TypeError:
+    except (TypeError, decimal.InvalidOperation):
+        # mixed types, or a Decimal literal against a NaN bound
         return False
     return False
 
