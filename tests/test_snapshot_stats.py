@@ -302,13 +302,17 @@ def test_pruned_read_keeps_widened_columns(spark, table):
         ), p
 
 
-@pytest.mark.parametrize("pred", ["d > 1.0", "d < 1", "d >= 1.000000000000000001"])
-def test_decimal_bound_one_ulp_from_literal_is_not_pruned(spark, tmp_path, pred):
+@pytest.mark.parametrize(
+    "pred, prunes",
+    [("d > 1.0", True), ("d < 1", True), ("d >= 1.000000000000000001", False)],
+)
+def test_decimal_bound_one_ulp_from_literal_is_not_pruned(spark, tmp_path, pred, prunes):
     """decimal(38,18) values one ulp either side of 1: a float zone map
     rounds both to 1.0, which would prove ``d > 1.0`` / ``d < 1`` false
     for their buckets. Bounds round outward and literals parse exactly, so
     a where-read still equals the filter while buckets holding only 1.0
-    stay prunable."""
+    stay prunable — except by a literal that rounds to the same double as
+    their bounds, which a double column would match."""
     from decimal import Decimal
 
     rows = [(f"k{i:03d}", Decimal(1)) for i in range(40)] + [
@@ -329,4 +333,33 @@ def test_decimal_bound_one_ulp_from_literal_is_not_pruned(spark, tmp_path, pred)
     )
     assert got == want and want, pred
     m = st.read_manifest(path)
-    assert len(st.prune_buckets(m, pred)) < len(m["buckets"]), pred
+    assert (len(st.prune_buckets(m, pred)) < len(m["buckets"])) == prunes, pred
+
+
+@pytest.mark.parametrize(
+    "pred",
+    ["x = 0.1", "x <= 0.1", "x = 0.3", "x >= 0.3", "x = 9007199254740993"],
+)
+def test_double_column_matches_literal_rounded_to_double(spark, tmp_path, pred):
+    """Spark compares a double column with ``0.1`` as the double nearest
+    0.1, not the exact decimal, so the bucket whose bound is that double
+    must survive ``x = 0.1`` — likewise an integer literal past 2**53,
+    which rounds onto the stored value."""
+    rows = [(f"k{i:03d}", 0.2) for i in range(40)] + [
+        ("a", 0.1),
+        ("b", 0.3),
+        ("c", 9007199254740992.0),
+    ]
+    path = str(tmp_path / "dbl_lit")
+    st.create_table(
+        spark,
+        path,
+        spark.createDataFrame(rows, "clip_id string, x double"),
+        key="clip_id",
+        n_buckets=8,
+    )
+    got = sorted(r["clip_id"] for r in st.read_table(spark, path, where=pred).collect())
+    want = sorted(
+        r["clip_id"] for r in st.read_table(spark, path).filter(pred).collect()
+    )
+    assert got == want and want, pred

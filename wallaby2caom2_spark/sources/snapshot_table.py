@@ -317,8 +317,7 @@ def _parse_literal(tok: str):
         return int(tok)
     except ValueError:
         pass
-    # exact, not float: a float literal can round past a stats bound that
-    # the column value (compared exactly by Spark for decimals) does not
+    # exact; _conjunct_excludes also tries its nearest double
     try:
         lit = decimal.Decimal(tok)
     except decimal.InvalidOperation:
@@ -326,14 +325,39 @@ def _parse_literal(tok: str):
     return lit if lit.is_finite() else None
 
 
+def _as_double(v):
+    """``v`` as Spark casts it to DOUBLE; non-numbers pass through."""
+    if isinstance(v, (int, float, decimal.Decimal)) and not isinstance(v, bool):
+        try:
+            return float(v)
+        except OverflowError:  # an int past the double range
+            return math.inf if v > 0 else -math.inf
+    return v
+
+
 def _conjunct_excludes(col_stats: list, op: str, lit) -> bool:
     """True when the zone map PROVES no row in the bucket satisfies
     ``col op lit``. NULL cells never satisfy a comparison (SQL
     three-valued logic), so an all-NULL interval (min=max=None) excludes
-    every comparison; mixed types fall back to not-prunable."""
+    every comparison; mixed types fall back to not-prunable.
+
+    Spark compares a numeric literal exactly against an integral or
+    decimal column, but in DOUBLE against a float column (or when the
+    literal is itself a double, like ``1e-1``): ``x = 0.1`` on a double
+    column matches the stored 0.1000000000000000055…, which the exact
+    literal does not. The bounds do not say which comparison Spark will
+    make, so a bucket is excluded only when both readings exclude it —
+    each is sound for its own case (rounding to double is monotone, so
+    the rounded bounds still hold every rounded value)."""
     lo, hi = col_stats[0], col_stats[1]
     if lo is None and hi is None:
         return True  # every row NULL for this column
+    return _interval_excludes(lo, hi, op, lit) and _interval_excludes(
+        _as_double(lo), _as_double(hi), op, _as_double(lit)
+    )
+
+
+def _interval_excludes(lo, hi, op: str, lit) -> bool:
     try:
         if op == "=":
             return lit < lo or lit > hi
